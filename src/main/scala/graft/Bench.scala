@@ -34,7 +34,34 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Per-query reference seconds (src/main/resources/bench-reference.json
+    * = per-query min over round 14's three clean closing runs at sf0.1),
+    * read with Jackson. Fails loudly when its key set differs from the
+    * registry: a partial reference would leave queries unflaggable with
+    * no diagnostic.
+    */
+  private def benchReference(): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val in = getClass.getResourceAsStream("/bench-reference.json")
+    require(in != null, "bench-reference.json is missing from the classpath")
+    val root = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    finally in.close()
+    val ref = root.properties.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+    val missing = SparkEntry.queries.keySet -- ref.keySet
+    val extra = ref.keySet -- SparkEntry.queries.keySet
+    require(missing.isEmpty && extra.isEmpty,
+      s"bench-reference.json keys differ from the registry: " +
+        s"missing ${missing.toSeq.sorted.mkString("[", ",", "]")}, " +
+        s"extra ${extra.toSeq.sorted.mkString("[", ",", "]")}")
+    ref
+  }
+
   def main(args: Array[String]): Unit = {
+    val refMap = try benchReference() catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] ${e.getMessage}")
+        sys.exit(1)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -118,6 +145,21 @@ object Bench {
       readings += ((afterQueries, s))
     }
     readCanary(0)
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Option[Throwable]) = {
+      val t0 = System.nanoTime()
+      val err = try { fn(spark, sfDir).count(); None }
+      catch { case NonFatal(e) => Some(e) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      // Operators persist() intermediates (graft.Materialize); the
+      // cache manager pins those blocks for the JVM's lifetime unless
+      // dropped. 100+ queries in one process would otherwise
+      // accumulate cached blocks and the later queries would pay the
+      // GC pressure — the leading suspect for round-8's unexplained
+      // curation_full 1.5→10.5 s drift. Cleanup OUTSIDE the timing.
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
+      (sec, err)
+    }
     // A broken query must FAIL the bench (non-zero exit), not silently
     // score -1 and leave the total looking healthy.
     val ordered = selected.toSeq
@@ -133,24 +175,10 @@ object Bench {
       // runs travel in the artifact next to the min: a (0.7, 29.3)
       // pair says "steal hit run 2, the min is trustworthy"; a
       // (29.3, 30.1) pair says "the whole window was contaminated".
-      def once(): (Double, Option[Throwable]) = {
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, sfDir).count(); None }
-        catch { case NonFatal(e) => Some(e) }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // Operators persist() intermediates (graft.Materialize); the
-        // cache manager pins those blocks for the JVM's lifetime unless
-        // dropped. 100+ queries in one process would otherwise
-        // accumulate cached blocks and the later queries would pay the
-        // GC pressure — the leading suspect for round-8's unexplained
-        // curation_full 1.5→10.5 s drift. Cleanup OUTSIDE the timing.
-        try spark.catalog.clearCache() catch { case NonFatal(_) => () }
-        (sec, err)
-      }
-      val (s1, e1) = once()
+      val (s1, e1) = once(fn)
       val r = if (e1.isDefined) (name, s1, s1, e1)
       else {
-        val (s2, e2) = once()
+        val (s2, e2) = once(fn)
         (name, s1, s2, e2)
       }
       if ((qi + 1) % CanaryEveryN == 0 && qi + 1 < ordered.size) readCanary(qi + 1)
@@ -168,41 +196,29 @@ object Bench {
     // Per-query contamination flags (round-14 lesson: a steal episode
     // spanning BOTH runs of one query slides under the interleaved
     // canary — the r14 driver run read graph_triangles at 11.5 s in
-    // both raws vs 0.82-0.99 s in three clean runs). A committed
-    // reference (src/main/resources/bench-reference.json = per-query
-    // min over round 14's three clean closing runs at sf0.1) lets the
-    // bench flag a query whose best-of-2 exceeds 3x its reference,
-    // re-run it ONCE after the main pass (by then the steal burst has
-    // usually moved on), and carry the whole story in the artifact:
-    // `suspect_rerun` maps each flagged query to [best_of_2, rerun],
-    // `still_suspect` lists those that stayed >3x after the re-run
-    // (either a genuine regression or a long steal episode — the raw
-    // pair plus canary readings disambiguate). The re-run only fires
-    // for flagged queries, so a clean run keeps the best-of-2 protocol
-    // bit-for-bit.
-    val refMap: Map[String, Double] = try {
-      val in = getClass.getResourceAsStream("/bench-reference.json")
-      if (in == null) Map.empty
-      else {
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        """"([^"]+)":([0-9.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case NonFatal(_) => Map.empty }
+    // both raws vs 0.82-0.99 s in three clean runs). The committed
+    // reference ([[benchReference]]) lets the bench flag a query whose
+    // best-of-2 exceeds 3x its reference, re-run it ONCE after the main
+    // pass (by then the steal burst has usually moved on), and carry
+    // the whole story in the artifact: `suspect_rerun` maps each
+    // flagged query to [best_of_2, rerun], `still_suspect` lists those
+    // that stayed >3x after the re-run (either a genuine regression or
+    // a long steal episode — the raw pair plus canary readings
+    // disambiguate). The re-run only fires for flagged queries, so a
+    // clean run keeps the best-of-2 protocol bit-for-bit. A re-run that
+    // fails yields no time (-1 in `suspect_rerun`), so the best-of-2
+    // stands.
     val SuspectFactor = 3.0
     val SuspectFloorSec = 1.0
+    def suspect(n: String, sec: Double): Boolean =
+      refMap.get(n).exists(r => sec > math.max(SuspectFloorSec, SuspectFactor * r))
     val suspectNames = results.collect {
-      case (n, s1, s2, None) if refMap.get(n).exists(r =>
-        math.min(s1, s2) > math.max(SuspectFloorSec, SuspectFactor * r)) => n
+      case (n, s1, s2, None) if suspect(n, math.min(s1, s2)) => n
     }
     val rerunSec: Map[String, Double] = suspectNames.flatMap { n =>
-      selected.get(n).map { fn =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
-        val s = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case NonFatal(_) => () }
-        n -> s
-      }
+      val (s, e) = once(selected(n))
+      e.foreach(err => System.err.println(s"[bench] suspect re-run of $n failed: $err"))
+      if (e.isEmpty) Some(n -> s) else None
     }.toMap
     val best = results.map { case (n, s1, s2, e) =>
       val b0 = if (e.isEmpty) math.min(s1, s2) else -1.0
@@ -210,8 +226,7 @@ object Bench {
       (n, b, s1, s2, e)
     }
     val stillSuspect = best.collect {
-      case (n, b, _, _, None) if rerunSec.contains(n) && refMap.get(n).exists(r =>
-        b > math.max(SuspectFloorSec, SuspectFactor * r)) => n
+      case (n, b, _, _, None) if suspectNames.contains(n) && suspect(n, b) => n
     }
     val suspectJson =
       if (suspectNames.isEmpty) ""

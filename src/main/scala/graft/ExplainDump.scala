@@ -15,14 +15,8 @@ import scala.util.control.NonFatal
   *
   * With no query list, dumps the whole registry. `SPARK_GRAFT_SF_DIR`
   * picks the data dir (default sf0.001 — plan SHAPE is scale-free).
-  * Two knobs matter for honesty:
-  *
-  *   - the default materialization policy (`persist`) is what actually
-  *     runs, so eager cuts inside operators appear as InMemoryRelation /
-  *     checkpoint scans exactly as they execute;
-  *   - `JAVA_TOOL_OPTIONS=-Dspark.graft.materialize=none` instead shows
-  *     the full uncut operator tree when the interesting plan sits
-  *     behind a cut.
+  * Cuts inside operators appear as InMemoryRelation / checkpoint scans
+  * exactly as they execute.
   *
   * Queries whose construction itself runs jobs (driver-fold loops)
   * still produce the FINAL plan, which is what the bench executes.

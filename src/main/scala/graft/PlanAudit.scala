@@ -275,7 +275,7 @@ object PlanAudit {
           l.contains("PushedFilters") || l.contains("ReadSchema") ||
           l.contains("BroadcastHashJoin") || l.contains("SortMergeJoin") || l.contains("TakeOrderedAndProject") ||
           l.contains("WholeStageCodegen") || l.contains("Exchange") || l.contains("HashAggregate(") ||
-          // cache reuse reads (the persist-policy cut points); note the
+          // cache reuse reads (the persist cut points); note the
           // InMemoryRelation line prints its cached CHILD plan inline, so
           // scan lines below one are the cut's content, not extra scans
           l.contains("InMemoryTableScan") || l.contains("InMemoryRelation"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize.MatOps
+
 /** Graph-based approximate nearest neighbor — the HNSW/Vamana-class
   * production vector index that the brute/LSH/IVF/PQ ladder stops
   * short of: a degree-capped k-NN neighbor GRAPH built by NN-descent
@@ -120,7 +122,7 @@ object AnnGraph {
     // one scoring join per round) with no loop or self-invalidation
     // hazard, so an EAGER cut only added a count() job wave before any
     // real work; the init round's first action populates the blocks.
-    val vecs = Materialize.cut(withNorm(vectors, idCol, vecCol))
+    val vecs = withNorm(vectors, idCol, vecCol).materialized
     val autoBits = if (planes < 0 || groupBits < 0)
       bitsFor(vecs.count(), targetWidth) else 0
     val nPlanes = if (planes < 0) autoBits else planes
@@ -175,11 +177,8 @@ object AnnGraph {
     // localCheckpoint lifecycle — Bench/Verify additionally clearCache
     // between queries). vecs is released here because `out`'s lineage
     // no longer references it.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(vecs)
-      out
-    }
+    Materialize.release(vecs)
+    out
   }
 
   /** Beam search over a [[buildGraph]] adjacency: the beam is SEEDED
@@ -200,7 +199,7 @@ object AnnGraph {
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && beam >= k && rounds >= 1,
       s"need beam >= k >= 1 and rounds >= 1, got k=$k beam=$beam rounds=$rounds")
-    val vecs = Materialize.cut(withNorm(vectors, idCol, vecCol))
+    val vecs = withNorm(vectors, idCol, vecCol).materialized
     val nPlanes = if (planes < 0) bitsFor(vectors.count(), targetWidth) else planes
     val q = broadcast(queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).cast("array<double>").as("_qv"))
@@ -255,10 +254,7 @@ object AnnGraph {
     // stays alive until the caller drops the result (localCheckpoint
     // lifecycle); vecs is released because `out`'s lineage no longer
     // references it.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(vecs)
-      out
-    }
+    Materialize.release(vecs)
+    out
   }
 }

@@ -575,10 +575,10 @@ object CorpusSelection {
     // map+partial-agg passes). The same trade holds on a cluster: two
     // scans of the source beat write+read of a corpus-sized cache.
     val rawFeats = bucketed(raw)
-    val tgtCounts = bucketed(target).groupBy(col("bucket")).agg(count(lit(1)).as("tc"))
-      .materializedEager
-    val rawCounts = rawFeats.groupBy(col("bucket")).agg(count(lit(1)).as("rc"))
-      .materializedEager
+    val tgtCounts = Materialize.cutEager(
+      bucketed(target).groupBy(col("bucket")).agg(count(lit(1)).as("tc")))
+    val rawCounts = Materialize.cutEager(
+      rawFeats.groupBy(col("bucket")).agg(count(lit(1)).as("rc")))
     val totals = tgtCounts.agg(sum(col("tc")).as("tt"))
       .crossJoin(rawCounts.agg(sum(col("rc")).as("rt")))
     val grid = raw.sparkSession.range(buckets)
@@ -1070,12 +1070,7 @@ object CorpusSelection {
           .otherwise(col("n_both").cast("double")
             / (col("n_both") + col("n_a_only") + col("n_b_only")).cast("double")))
       .orderBy(col("gate_a"), col("gate_b"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(one)
-      pinned
-    }
+    Materialize.pin(out, one)
   }
 
   /** Selection-pressure audit: per gate, how the kept set's mean score
@@ -1102,12 +1097,7 @@ object CorpusSelection {
     }.reduce(_.unionByName(_))
       .withColumn("shift", col("mean_kept") - col("mean_all"))
       .orderBy(col("gate"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(one)
-      pinned
-    }
+    Materialize.pin(out, one)
   }
 
   /** Leave-one-source-out ablation of a corpus-mean metric — the

@@ -87,15 +87,14 @@ object Dedup {
     * (collapsed downstream by [[latestByKey]]-style dedup) instead of
     * silently losing them forever.
     *
-    * The survivors are pinned with [[Materialize.cutPinned]] — an eager
-    * `localCheckpoint` under EVERY materialization policy, the one site
-    * where the persist default is FORBIDDEN: the survivors' plan scans
-    * the store parquet at `storeDir`, and the commit below writes to
-    * that same path, so a persist cut (lineage retained) would trigger
-    * `CacheManager.recacheByPath` on the append and recompute the
-    * cached survivors against the just-updated store — every batch
-    * fingerprint is then "seen" and the returned frame collapses to 0
-    * rows. Only true lineage truncation removes the store scan from the
+    * The survivors are pinned with [[Materialize.pin]] — an eager
+    * `localCheckpoint`, because a persist cut is FORBIDDEN here: the
+    * survivors' plan scans the store parquet at `storeDir`, and the
+    * commit below writes to that same path, so a persist cut (lineage
+    * retained) would trigger `CacheManager.recacheByPath` on the append
+    * and recompute the cached survivors against the just-updated store
+    * — every batch fingerprint is then "seen" and the returned frame
+    * collapses to 0 rows. Only true lineage truncation removes the store scan from the
     * plan; resilience-via-recompute is precisely the hazard in a
     * read-modify-the-thing-you-read cycle.
     */
@@ -104,7 +103,7 @@ object Dedup {
                          (write: DataFrame => Unit): DataFrame = {
     val spark = batch.sparkSession
     val seen = graft.state.FingerprintStore.load(spark, storeDir)
-    val novel = Materialize.cutPinned(incrementalDedup(batch, seen, textCol, idCol))
+    val novel = Materialize.pin(incrementalDedup(batch, seen, textCol, idCol))
     write(novel)
     graft.state.FingerprintStore.append(novel.select(col("fingerprint")), storeDir)
     novel
@@ -157,9 +156,9 @@ object Dedup {
   def incrementalNearDup(batch: DataFrame, store: DataFrame, textCol: String, idCol: String,
                          threshold: Double = 0.5, k: Int = 3, numHashes: Int = 128,
                          bands: Int = 32): DataFrame = {
-    def prep(df: DataFrame) = Materialize.cut(
+    def prep(df: DataFrame) =
       df.select(col(idCol), shingleHashes(col(textCol), k).as("_sh"))
-        .where(size(col("_sh")) > 0))
+        .where(size(col("_sh")) > 0).materialized
     val b = prep(batch)
     val st = prep(store)
     def buckets(df: DataFrame, idAs: String) =
@@ -277,13 +276,14 @@ object Dedup {
     val ranked = coins
       .withColumn("rk", row_number().over(Window.partitionBy(col("source")).orderBy(col("coin"))))
       .withColumn("n_exact", count(lit(1)).over(Window.partitionBy(col("source"))))
-    val perSource = ranked
+    // sources rows; consumed by the pair list twice
+    val perSource = Materialize.cutEager(ranked
       .groupBy(col("source"))
       .agg(max(col("n_exact")).as("n_exact"), max(when(col("rk") === k, col("coin"))).as("_kth"))
-      .select(col("source"), col("n_exact"), estCol(col("n_exact"), col("_kth")).as("est"))
-      .materializedEager // sources rows; consumed by the pair list twice
-    val sketch = ranked.where(col("rk") <= k).select(col("source"), col("coin"))
-      .materializedEager // sources x k rows; consumed by both union sides
+      .select(col("source"), col("n_exact"), estCol(col("n_exact"), col("_kth")).as("est")))
+    // sources x k rows; consumed by both union sides
+    val sketch = Materialize.cutEager(
+      ranked.where(col("rk") <= k).select(col("source"), col("coin")))
     val pairList = perSource
       .select(col("source").as("source_a"), col("n_exact").as("exact_a"), col("est").as("est_a"))
       .crossJoin(perSource
@@ -597,18 +597,17 @@ object Dedup {
     * candidate pipeline AND both sides of the verification join — the
     * previous form re-scanned the (column-pruned) input and re-ran the
     * shingle kernel once per consumer, 3× the operator's per-row CPU.
-    * Under the default `persist(MEMORY_AND_DISK)` policy the hash arrays
-    * are materialized once (written once, read by three consumers) with
-    * lineage intact, so a lost executor recomputes the lost blocks
-    * instead of failing the job. Note the weaker row-identity guarantee
-    * that buys: recomputation replays lineage, so a NON-deterministic
-    * upstream (e.g. a round-robin repartition) can hand different rows
+    * The `persist(MEMORY_AND_DISK)` cut materializes the hash arrays
+    * once (written once, read by three consumers) with lineage intact,
+    * so a lost executor recomputes the lost blocks instead of failing
+    * the job. Note the weaker row-identity guarantee that buys:
+    * recomputation replays lineage, so a NON-deterministic upstream
+    * (e.g. a round-robin repartition) can hand different rows
     * to the candidate pipeline vs the verification join after an
     * executor loss. Deterministic inputs (any pure projection of a
     * source read — every call site in this engine) are unaffected;
-    * feed a non-deterministic upstream through
-    * [[Materialize.cutPinned]] first, or run under the
-    * `localCheckpoint` policy, to get the strong same-rows pin back.
+    * feed a non-deterministic upstream through [[Materialize.pin]]
+    * first to get the strong same-rows pin back.
     */
   def minHashPairs(docs: DataFrame, textCol: String, idCol: String,
                    threshold: Double = 0.5, k: Int = 3,
@@ -662,8 +661,7 @@ object Dedup {
     // (fingerprint → rep) table is one row per distinct content and the
     // two keyed scans are pure map work. Checkpointed: consumed by the
     // reps filter and the label map-back.
-    val repMap = keyed.groupBy(col("_fp")).agg(min(col(idCol)).as("_rep"))
-      .materializedEager
+    val repMap = Materialize.cutEager(keyed.groupBy(col("_fp")).agg(min(col(idCol)).as("_rep")))
     val reps = keyed.join(repMap, "_fp")
       .where(col(idCol) === col("_rep"))
       .select(col(idCol), col("_text"))
@@ -810,9 +808,9 @@ object Dedup {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.types.BinaryType
-    // Pinned eager checkpoint (NOT the policy default): consumed by the
+    // Pinned eager checkpoint (NOT a persist cut): consumed by the
     // Bloom build AND the exact confirm — without a cut the probe
-    // tokenization runs twice. cutPinned rather than cutEager because
+    // tokenization runs twice. pin rather than cutEager because
     // the persist form measured a reproducible >=2x premium on this
     // whole operator at sf0.1 (median 5.9 s vs 2.6 s, 3-run isolated
     // A/B, round 11) — the slim gram set pays columnar cache encode +
@@ -821,7 +819,7 @@ object Dedup {
     // is already driver-synchronous (the filter returns to the driver
     // as one 4 MB value in the same breath), so re-running it after an
     // executor loss replays idempotent read-only lineage.
-    val probeGrams = Materialize.cutPinned(probe
+    val probeGrams = Materialize.pin(probe
       .select(explode(shingleHashes(col(textCol), n)).as("g"))
       .distinct())
     val bfBytes = probeGrams
@@ -1038,9 +1036,8 @@ object Dedup {
     // label map-back join (without the checkpoint the scan → simhash
     // kernel pass runs twice), and fpRep feeds the pair builder AND the
     // join (without it the rep aggregate runs twice)
-    val fp = simHash(docs, textCol, idCol, bits).materializedEager
-    val fpRep = fp.groupBy(col("simhash")).agg(min(col(idCol)).as("rep"))
-      .materializedEager
+    val fp = Materialize.cutEager(simHash(docs, textCol, idCol, bits))
+    val fpRep = Materialize.cutEager(fp.groupBy(col("simhash")).agg(min(col(idCol)).as("rep")))
     val comp = connectedComponents(
       simHashRepPairs(fpRep, bits, chunks, maxHamming, maxBucketGroups), "ra", "rb", maxIter)
       .withColumnRenamed("id", "rep")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize.MatOps
+
 /** Row-level data-quality expectations — the batch-gate generalization of
   * the engine's per-row error isolation
   * (`/root/reference/app/services/tracker.py` catches and counts per-issue
@@ -340,8 +342,8 @@ object Expectations {
     // letting k exceed the countable rows and the bucket walk return
     // no bucket — the require below then fails loudly instead of the
     // bracket silently corrupting (null-free inputs are bit-identical)
-    val v = Materialize.cut(grouped.select(col("_g").cast("long").as("_g"),
-      col("_v").cast("long").as("_v")).where(col("_v").isNotNull))
+    val v = grouped.select(col("_g").cast("long").as("_g"),
+      col("_v").cast("long").as("_v")).where(col("_v").isNotNull).materialized
     import v.sparkSession.implicits._
     // one stats pass populates the cache and seeds every bracket
     val stats = v.groupBy(col("_g"))

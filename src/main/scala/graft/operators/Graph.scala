@@ -505,7 +505,7 @@ object Graph {
       // halves the heavy work. `(s * Scale) div t` is evaluated with
       // the identical int64 operands, so every score is bit-identical.
       // authority half-step: pull hub mass along in-edges, renormalize
-      val araw = Materialize.cutPinned(srcPart
+      val araw = Materialize.pin(srcPart
         .join(hubs.hint("shuffle_hash"), srcPart("src") === hubs("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("s")))
       // coalesce(.., 1): only reachable on an EMPTY edge set, where
@@ -519,7 +519,7 @@ object Graph {
       prevA = Some(auths)
       Materialize.release(araw)
       // hub half-step: pull the fresh authority mass along out-edges
-      val hraw = Materialize.cutPinned(dstPart
+      val hraw = Materialize.pin(dstPart
         .join(auths.hint("shuffle_hash"), dstPart("dst") === auths("node"))
         .groupBy(col("src")).agg(sum(col("a")).as("s")))
       val ht = hraw.agg(coalesce(sum(col("s")), lit(1L))).collect()(0).getLong(0)
@@ -593,7 +593,7 @@ object Graph {
     // each summary must be PINNED (eager truncating cut) before the
     // loop's next cutLoop releases the register generation its lazy
     // plan would otherwise re-read — the released-checkpoint trap
-    var out = Materialize.cutPinned(summarize(regs, 0))
+    var out = Materialize.pin(summarize(regs, 0))
     var prev: Option[DataFrame] = Some(regs)
     for (round <- 1 to rounds) {
       val contrib = slim
@@ -603,7 +603,7 @@ object Graph {
         .groupBy(col("node"), col("j")).agg(max(col("mr")).as("mr"))
       regs = Materialize.cutLoop(next, prev)
       prev = Some(regs)
-      out = out.unionByName(Materialize.cutPinned(summarize(regs, round)))
+      out = out.unionByName(Materialize.pin(summarize(regs, round)))
     }
     // every consumer of the edge cache and of the final register
     // generation has materialized (all summaries are pinned cuts)
@@ -627,8 +627,8 @@ object Graph {
     * keys, one row out at any scale.
     */
   def assortativity(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = Materialize.cut(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
+    val e = edges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")).materialized
     val od = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
     val ind = e.groupBy(col("dst")).agg(count(lit(1)).as("ind"))
     e.join(od, Seq("src")).join(ind, Seq("dst"))
@@ -861,11 +861,6 @@ object Graph {
     val out = e.select(col("u").as("src"), col("v").as("dst"),
       col("support").cast("int").as("support"))
       .orderBy(col("src"), col("dst"))
-    if (Materialize.debugNoCut(out)) (out, counts.result())
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(e)
-      (pinned, counts.result())
-    }
+    (Materialize.pin(out, e), counts.result())
   }
 }

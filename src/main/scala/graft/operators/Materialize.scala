@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Reuse-point materialization policy for multi-consumer intermediates.
+/** Reuse-point materialization for multi-consumer intermediates.
   *
   * Operators that feed one intermediate DataFrame to several consumers
   * (a tokenization shared by a model fit and a scoring pass, a gated
@@ -17,13 +17,13 @@ import org.apache.spark.storage.StorageLevel
   * reused by every consumer, but lineage survives, so an executor loss
   * recomputes the lost partitions instead of killing the run.
   *
-  * Knob: `spark.graft.materialize` =
-  *   - `persist` (default) — `persist(MEMORY_AND_DISK)`, lineage kept;
-  *   - `localCheckpoint` — the pre-round-9 behavior (marginally cheaper
-  *     on a single-JVM `local[n]` master where executor loss cannot
-  *     happen, and frees its blocks by GC instead of cache pinning);
-  *   - `none` — no cut at all (plan-shape debugging only; shared
-  *     subtrees re-execute per consumer).
+  * One spelling per intent:
+  *   - `.materialized` — lazy reuse cut (persist);
+  *   - [[cutEager]] — reuse cut populated now (persist + count);
+  *   - [[pin]] — eager truncating cut of a result, freeing the cuts
+  *     its plan read;
+  *   - [[cutLoop]] — one generation of an iterative loop;
+  *   - [[release]] — free a cut.
   *
   * Persisted blocks are pinned by the session's cache manager until
   * `spark.catalog.clearCache()` or `unpersist()`. `Bench` and `Verify`
@@ -33,67 +33,51 @@ import org.apache.spark.storage.StorageLevel
   * obtained).
   */
 object Materialize {
-  private def policy(df: DataFrame): String = {
-    val v = df.sparkSession.conf.get("spark.graft.materialize", "persist")
-    v match {
-      case "persist" | "localCheckpoint" | "none" => v
-      // fail loudly: a typo ("localcheckpoint") silently mapping to the
-      // default would make misconfiguration invisible
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize=$other (expected persist|localCheckpoint|none)")
-    }
+  /** The reuse cut: lazy `persist(MEMORY_AND_DISK)`, populated by the
+    * first consumer.
+    */
+  implicit class MatOps(private val df: DataFrame) extends AnyVal {
+    def materialized: DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  def cut(df: DataFrame): DataFrame =
-    policy(df) match {
-      case "localCheckpoint" => df.localCheckpoint(eager = false)
-      case "none"            => df
-      case _                 => df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Eager cut — where `.localCheckpoint(true)` used to be: the caller
-    * needs the blocks computed NOW (e.g. a bounded probe about to be
-    * collected, or a loop iteration whose lineage must not stack).
-    * Under the default persist policy that is `persist` + a `count()`
-    * action to force population; lineage survives executor loss.
+  /** Eager reuse cut, for a caller that needs the blocks computed NOW
+    * (e.g. a bounded probe about to be collected): `persist` + a
+    * `count()` action to force population; lineage survives executor
+    * loss.
     */
-  def cutEager(df: DataFrame): DataFrame =
-    policy(df) match {
-      case "localCheckpoint" => df.localCheckpoint(eager = true)
-      case "none"            => df
-      case _ =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-    }
+  def cutEager(df: DataFrame): DataFrame = {
+    val p = df.materialized
+    p.count()
+    p
+  }
 
-  /** Pinned cut — an eager `localCheckpoint` under EVERY policy,
-    * including the persist default. Use it when the operator is about to
-    * WRITE to a path its own plan READS (a read-modify-commit cycle such
-    * as [[graft.operators.Dedup.incrementalDedupRun]]): under `persist`
-    * the cached plan keeps its lineage, so the commit write triggers
-    * `CacheManager.recacheByPath` on the store path and the cached
-    * result is recomputed against the just-mutated store — the
-    * operator's own commit invalidates its own output (observed as
-    * 0-row results). Only a true lineage truncation removes the store
-    * scan from the plan; resilience-via-lineage is exactly the property
-    * that makes persist WRONG here, so this method ignores the policy
-    * knob on purpose.
+  /** Pin `out` with an eager `localCheckpoint`, then [[release]] every
+    * `free` cut, and return the pin. Two uses:
+    *   - an operator's final result whose plan reads cuts the operator
+    *     made itself: the pin truncates the lineage, so those cuts can
+    *     be freed before the caller consumes the result (a persist cut
+    *     of `out` would keep them in its plan and could recompute
+    *     through freed blocks);
+    *   - a read-modify-commit cycle, where the operator is about to
+    *     WRITE a path its own plan READS (e.g.
+    *     [[graft.operators.Dedup.incrementalDedupRun]]): a persist cut
+    *     keeps its lineage, so the commit write triggers
+    *     `CacheManager.recacheByPath` on that path and the cached
+    *     result is recomputed against the just-mutated store — the
+    *     operator's own commit invalidates its own output (observed as
+    *     0-row results). Only a true lineage truncation removes the
+    *     store scan from the plan.
     */
-  def cutPinned(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  def pin(out: DataFrame, free: DataFrame*): DataFrame = {
+    val pinned = out.localCheckpoint(eager = true)
+    free.foreach(release)
+    pinned
+  }
 
-  /** True under the `none` policy (plan-shape debugging). Operators that
-    * normally pin their result and release internal generations check
-    * this to instead return the raw uncut plan (and keep the
-    * generations alive) — the full operator tree stays inspectable.
-    */
-  def debugNoCut(df: DataFrame): Boolean = policy(df) == "none"
-
-  /** Loop-iteration cut — eager, truncating under EVERY policy, and
-    * frees the PREVIOUS generation's blocks. Iterative refinement
-    * (`Bpe.train`'s merge rounds, k-means passes) must not stack
-    * lineage: under the persist default each `.materialized` keeps the
-    * full plan, so round k nests k `InMemoryRelation`s (quadratic
+  /** Loop-iteration cut — eager, truncating, and frees the PREVIOUS
+    * generation's blocks. Iterative refinement (`Bpe.train`'s merge
+    * rounds, k-means passes) must not stack lineage: each
+    * `.materialized` persist keeps the full plan, so round k nests k `InMemoryRelation`s (quadratic
     * analyzer work, eventual StackOverflow) and pins k generations of
     * cache with no unpersist. Mirrors the RDD persist/unpersist
     * discipline of the connected-components fixpoint
@@ -117,11 +101,4 @@ object Materialize {
         lr.rdd.unpersist(blocking = false)
       case _ => df.unpersist(blocking = false)
     }
-
-  /** `.materialized` chains where `.localCheckpoint(false)` used to. */
-  implicit class MatOps(private val df: DataFrame) extends AnyVal {
-    def materialized: DataFrame = Materialize.cut(df)
-    def materializedEager: DataFrame = Materialize.cutEager(df)
-    def materializedPinned: DataFrame = Materialize.cutPinned(df)
-  }
 }

@@ -97,12 +97,11 @@ object RateAnomaly {
   def psi(reference: DataFrame, current: DataFrame, keyCol: String, valueCol: String,
           bins: Int = 16, alertAt: Double = 0.2): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
-    import graft.operators.Materialize.MatOps
     val scale = 1099511627776.0 // 2^40
-    val edges = reference
+    // keys rows; consumed by both binning passes
+    val edges = Materialize.cutEager(reference
       .groupBy(col(keyCol).as("_key"))
-      .agg(min(col(valueCol).cast("double")).as("_mn"), max(col(valueCol).cast("double")).as("_mx"))
-      .materializedEager // keys rows; consumed by both binning passes
+      .agg(min(col(valueCol).cast("double")).as("_mn"), max(col(valueCol).cast("double")).as("_mx")))
     def binned(df: DataFrame, side: String): DataFrame = df
       .select(col(keyCol).as("_key"), col(valueCol).cast("double").as("_v"))
       .join(broadcast(edges), Seq("_key"))

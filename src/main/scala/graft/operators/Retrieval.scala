@@ -323,7 +323,7 @@ object Retrieval {
     var out: DataFrame = null
     for (r <- 1 to k) {
       val score = if (r == 1) col("_rel") else col("_rel") - col("_maxsim")
-      val pick = Materialize.cutPinned(pool
+      val pick = Materialize.pin(pool
         .groupBy(col("_q"))
         .agg(min(struct((-score).as("s"), col("_c").as("c"), col("_cv").as("v"))).as("_m"))
         .select(col("_q"), lit(r).as("sel_round"), col("_m.c").as("_c"),

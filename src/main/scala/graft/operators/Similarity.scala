@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.{DotProduct, HyperplaneBucket, NearestCentroid}
+import graft.operators.Materialize.MatOps
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -1087,16 +1088,8 @@ object Similarity {
       .agg(count(lit(1)).cast("int").as("n_members"), sum(col("d2")).as("inertia_fp"))
     // truncating pin, not a persist cut: the centroid generation released
     // below is a localCheckpoint — a lineage-retaining cut could try to
-    // recompute through its freed blocks. Under the debug policy the raw
-    // plan is returned uncut (and nothing released) so it stays
-    // inspectable.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(q)
-      Materialize.release(cents)
-      pinned
-    }
+    // recompute through its freed blocks
+    Materialize.pin(out, q, cents)
   }
 
   /** Multi-vector late-interaction scoring (the ColBERT MaxSim operator,
@@ -1167,9 +1160,10 @@ object Similarity {
     */
   def whitenProfile(embs: DataFrame, vecCol: String, idCol: String,
                     scale: Long = 1L << 20): DataFrame = {
-    val q = Materialize.cut(embs.select(col(idCol).as("vec_id"),
+    // feeds the stats aggregate and the transform join
+    val q = embs.select(col(idCol).as("vec_id"),
       posexplode(transform(col(vecCol), x => floor(x.cast("double") * scale).cast("long")))
-        .as(Seq("dim", "v")))) // feeds the stats aggregate and the transform join
+        .as(Seq("dim", "v"))).materialized
     val stats = q.groupBy(col("dim"))
       .agg(sum(col("v")).as("s"), sum(col("v") * col("v")).as("s2"), count(lit(1)).as("n"))
       .select(col("dim"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize.MatOps
+
 /** Unigram-LM subword tokenizer training (Kudo 2018, "Subword
   * Regularization" — the SentencePiece unigram model): the production
   * alternative to [[Bpe]] and the other half of the tokenizer-training
@@ -201,10 +203,10 @@ object UnigramLm {
     // count job each (5 extra job waves per fit, pure scheduling).
     // They populate inside round 1's first action and are released
     // only after seg2/u2 are EAGERLY materialized below.
-    val words = Materialize.cut(wordCounts(docs, textCol))
-    val v0 = Materialize.cut(seedVocab(words, pieceLen, seedMulti))
+    val words = wordCounts(docs, textCol).materialized
+    val v0 = seedVocab(words, pieceLen, seedMulti).materialized
     // round 1: segment under seed-frequency costs, count usage
-    val u1 = Materialize.cut(usageOf(viterbiSeg(words, pieceCosts(v0), pieceLen)))
+    val u1 = usageOf(viterbiSeg(words, pieceCosts(v0), pieceLen)).materialized
     // prune: keep every single char (coverage) + top keepMulti used
     // multi-char pieces (ties piece-ascending); +1-smooth the retained
     // counts so unused survivors keep a finite cost
@@ -216,9 +218,8 @@ object UnigramLm {
       .join(u1, Seq("piece"), "left")
       .select(col("piece"), (coalesce(col("n_uses"), lit(0L)) + 1L).as("cnt"))
     // round 2: re-segment under the re-estimated costs. Both returned
-    // tables are EAGER cuts before the intermediates are released —
-    // under the localCheckpoint policy a released generation cannot be
-    // recomputed through, so nothing may still need it lazily.
+    // tables are EAGER cuts before the intermediates are released, so
+    // nothing still needs a released intermediate lazily.
     val seg2 = Materialize.cutEager(viterbiSeg(words, pieceCosts(v1), pieceLen))
     val u2 = if (!withUsage) None
     else Some(Materialize.cutEager(v1.select(col("piece"))
@@ -244,11 +245,8 @@ object UnigramLm {
     // vocab-sized result in one extra job wave purely to allow
     // release(u2)). seg2 is released: u2's checkpoint/persist no longer
     // needs it; u2 stays alive until the caller drops the result.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(seg2)
-      out
-    }
+    Materialize.release(seg2)
+    out
   }
 
   /** Encode the corpus with the trained tokenizer: per document, the
@@ -290,20 +288,17 @@ object UnigramLm {
     */
   def trainVocab(docs: DataFrame, textCol: String, pieceLen: Int = 4,
                  seedMulti: Int = 16, keepMulti: Int = 12): DataFrame = {
-    val words = Materialize.cut(wordCounts(docs, textCol))
-    val v0 = Materialize.cut(seedVocab(words, pieceLen, seedMulti))
-    val u1 = Materialize.cut(usageOf(viterbiSeg(words, pieceCosts(v0), pieceLen)))
+    val words = wordCounts(docs, textCol).materialized
+    val v0 = seedVocab(words, pieceLen, seedMulti).materialized
+    val u1 = usageOf(viterbiSeg(words, pieceCosts(v0), pieceLen)).materialized
     val chars = v0.where(length(col("piece")) === 1).select(col("piece"))
     val keep = u1.where(length(col("piece")) > 1)
       .orderBy(col("n_uses").desc, col("piece")).limit(keepMulti)
       .select(col("piece"))
-    val v1 = Materialize.cutPinned(chars.unionByName(keep)
+    Materialize.pin(chars.unionByName(keep)
       .join(u1, Seq("piece"), "left")
-      .select(col("piece"), (coalesce(col("n_uses"), lit(0L)) + 1L).as("cnt")))
-    Materialize.release(words)
-    Materialize.release(v0)
-    Materialize.release(u1)
-    v1
+      .select(col("piece"), (coalesce(col("n_uses"), lit(0L)) + 1L).as("cnt")),
+      words, v0, u1)
   }
 
   /** Encode against a persisted [[trainVocab]] artifact: costs rebuilt
@@ -316,7 +311,7 @@ object UnigramLm {
     */
   def tokenizeCountsWith(docs: DataFrame, textCol: String, idCol: String,
                          vocab: DataFrame, pieceLen: Int = 4): DataFrame = {
-    val words = Materialize.cut(wordCounts(docs, textCol))
+    val words = wordCounts(docs, textCol).materialized
     val seg = Materialize.cutEager(viterbiSeg(words, pieceCosts(vocab), pieceLen))
     val out = docs
       .select(col(idCol), explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
@@ -329,11 +324,8 @@ object UnigramLm {
     // No final pin: the caller's single action is the encode pass.
     // `seg` is an eager cut, so `words` can be released now; seg stays
     // alive until the caller drops the result.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(words)
-      out
-    }
+    Materialize.release(words)
+    out
   }
 
   /** Vocabulary-size TUNING CURVE: the tokenizer's fertility at each
@@ -361,7 +353,7 @@ object UnigramLm {
     import spark.implicits._
     // the shared prefix: corpus pass + seed + round-1 usage, ONCE
     val words = Materialize.cutEager(wordCounts(docs, textCol))
-    val v0 = Materialize.cut(seedVocab(words, pieceLen, seedMulti))
+    val v0 = seedVocab(words, pieceLen, seedMulti).materialized
     val u1 = Materialize.cutEager(usageOf(viterbiSeg(words, pieceCosts(v0), pieceLen)))
     val chars = v0.where(length(col("piece")) === 1).select(col("piece"))
     val rows = keepMultis.map { km =>

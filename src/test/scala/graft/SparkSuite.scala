@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,28 +31,40 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
     if (r.isNullAt(0)) null else r.get(0)
   }
 
+  /** The executed plan TREE of `df` (AQE's input plan when adaptive). A
+    * cut's cached plan is not part of it: `InMemoryTableScanExec` is a
+    * leaf, and its `InMemoryRelation` child plan ran once, when the cut
+    * was populated — even though the plan STRING prints it inline at
+    * every read.
+    */
+  def executedTree(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.inputPlan
+    case p => p
+  }
+
   /** Count physical reuse-read leaves in the executed plan TREE: cache
-    * reads (`InMemoryTableScanExec`, the persist policy) plus checkpoint
-    * reads (`RDDScanExec`, prints as "Scan ExistingRDD", the
-    * localCheckpoint policy). Tree counts, unlike plan-STRING counts,
+    * reads (`InMemoryTableScanExec`, `.materialized` / `cutEager`) plus
+    * checkpoint reads (`RDDScanExec`, prints as "Scan ExistingRDD",
+    * `pin` / `cutLoop`). Tree counts, unlike plan-STRING counts,
     * exclude the cached child plans `InMemoryRelation` prints inline — a
     * cut whose own plan reads an earlier cut re-prints that read inside
     * its relation dump even though it never re-executes, so string
     * occurrence counts overshoot the compute count.
     */
-  def reuseReads(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val root: SparkPlan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
-    root.collect {
+  def reuseReads(df: DataFrame): Int =
+    executedTree(df).collect {
       case s: InMemoryTableScanExec => s: SparkPlan
       case s: RDDScanExec => s: SparkPlan
     }.size
-  }
+
+  /** Count the expressions named `name` (their `prettyName`) in the
+    * executed plan TREE — a compute count: a kernel behind a cut runs in
+    * the cut's cached plan, outside the tree, and is not counted.
+    */
+  def kernelCalls(df: DataFrame, name: String): Int =
+    executedTree(df)
+      .flatMap(_.expressions.flatMap(_.collect { case e if e.prettyName == name => e }))
+      .size
 }
 
 object SparkSuite {

@@ -213,23 +213,15 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minHashPairs runs the shingle kernel once: all consumers read the shared cut") {
-    // the candidate pipeline and both verification join sides must share
-    // the one materialized (id, shingle-hashes) pass. Pin the
-    // localCheckpoint policy so the count is a COMPUTE count: the cut
-    // truncates lineage, so the kernel appears NOWHERE in the plan (it
-    // lives inside the checkpointed RDD, computed once) and each reuse
-    // read prints as a Scan ExistingRDD. Under the persist default the
-    // InMemoryRelation keeps its child plan visible in the string (the
-    // kernel prints per reuse read even though it executes once), so
-    // occurrence counts would not measure computation.
-    spark.conf.set("spark.graft.materialize", "localCheckpoint")
-    try {
-      val plan = Dedup.minHashPairs(docs, "text", "doc_id")
-        .queryExecution.executedPlan.toString
-      def count(needle: String): Int = needle.r.findAllIn(plan).size
-      assert(count("shingle_hashes") == 0, s"shingle kernel recomputed per consumer:\n$plan")
-      assert(count("Scan ExistingRDD") == 3, s"expected 3 reads of the shared checkpoint:\n$plan")
-    } finally spark.conf.unset("spark.graft.materialize")
+    // the candidate pipeline and both verification join sides share the
+    // one materialized (id, shingle-hashes) pass: the kernel runs only in
+    // the cut's cached plan, and the executed tree reads the cut 3 times.
+    // Repartitioned so the optimizer cannot fold the kernel into a local
+    // relation, which would hide a per-consumer recompute from the count.
+    val out = Dedup.minHashPairs(docs.repartition(2), "text", "doc_id")
+    val plan = out.queryExecution.executedPlan
+    assert(kernelCalls(out, "shingle_hashes") == 0, s"shingle kernel recomputed per consumer:\n$plan")
+    assert(reuseReads(out) == 3, s"expected 3 reads of the shared cut, got ${reuseReads(out)}:\n$plan")
   }
 
   test("ngramContamination broadcasts the probe side and never sort-merge-joins") {
@@ -245,18 +237,12 @@ class DedupSpec extends SparkSuite {
     val vecs = (0 until 40)
       .map(i => (i.toLong, (1 to 8).map(j => (i * j % 7).toFloat)))
       .toDF("vec_id", "embedding")
-    // localCheckpoint policy pinned for the same reason as the
-    // minHashPairs test above: only a truncating cut makes occurrence
-    // counts equal compute counts.
-    spark.conf.set("spark.graft.materialize", "localCheckpoint")
-    try {
-      val plan = Dedup.semanticDedup(vecs, "vec_id", "embedding", dim = 8,
-        cells = 4, sampleN = 40, iters = 2)
-        .queryExecution.executedPlan.toString
-      def count(needle: String): Int = needle.r.findAllIn(plan).size
-      assert(count("nearest_centroid") == 0, s"assignment kernel recomputed per consumer:\n$plan")
-      assert(count("Scan ExistingRDD") == 3, s"expected 3 reads of the shared checkpoint:\n$plan")
-    } finally spark.conf.unset("spark.graft.materialize")
+    // counted on the executed tree, as in the minHashPairs test above
+    val out = Dedup.semanticDedup(vecs.repartition(2), "vec_id", "embedding", dim = 8,
+      cells = 4, sampleN = 40, iters = 2)
+    val plan = out.queryExecution.executedPlan
+    assert(kernelCalls(out, "nearest_centroid") == 0, s"assignment kernel recomputed per consumer:\n$plan")
+    assert(reuseReads(out) == 3, s"expected 3 reads of the shared cut, got ${reuseReads(out)}:\n$plan")
   }
 
   test("native simhash equals the explode+aggregate reference form") {

@@ -490,20 +490,32 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("lloydKMeans broadcasts the centroid table (no corpus-side shuffle to score)") {
-    // policy `none` leaves the plan uncut so the scoring join is visible
-    // in the returned frame (the default pins the result behind a cache
-    // read); the loop's centroid generations still truncate via cutLoop
+    // the result is a pin, so the scoring join runs in the pin's own
+    // localCheckpoint action — the operator's last one. Capture that
+    // action's physical plan; the loop's centroid generations
+    // (cutLoop) are earlier localCheckpoint actions.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
     val df = (0 until 30).map(i =>
       (i.toLong, Seq.tabulate(4)(d => (i * 7 + d).toFloat)))
       .toDF("vec_id", "embedding")
-    spark.conf.set("spark.graft.materialize", "none")
-    try {
-      val plan = Similarity.lloydKMeans(df, "embedding", "vec_id", k = 2, iters = 2)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-        plan)
-      assert(!plan.contains("CartesianProduct"), plan)
-    } finally spark.conf.unset("spark.graft.materialize")
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpoints.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      Similarity.lloydKMeans(df, "embedding", "vec_id", k = 2, iters = 2)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      checkpoints.asScala.lastOption.getOrElse(fail("no localCheckpoint action observed"))
+    } finally spark.listenerManager.unregister(listener)
+    assert(plan.contains("inertia_fp"), s"last localCheckpoint is not the result pin:\n$plan")
+    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
+      plan)
+    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("maxSimTopK: hand-computed MaxSim scores, tie broken by doc id") {
